@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** The listener bus is package-private to Spark; the benchmark needs to
+  * wait for it to drain before it reads what its listeners collected.
+  */
+object PerfbenchListenerBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+}
